@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.{Base64, UUID}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -44,10 +45,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * window in which a reader can observe duplicated or missing rows.
   *
   * Same-version races: manifest creation is EXCLUSIVE — local
-  * filesystems use an O_EXCL `CREATE_NEW` (the kernel linearizes racing
-  * creators; POSIX rename would overwrite silently and lose a confirmed
-  * commit), HDFS uses rename-into-place which fails on an existing
-  * destination. Versions are dense, so winning the create of `v+1` IS the
+  * filesystems hard-link a fully written temp file into place (the kernel
+  * linearizes racing creators; POSIX rename would overwrite silently and
+  * lose a confirmed commit), HDFS uses rename-into-place which fails on an
+  * existing destination. Versions are dense, so winning the create of `v+1` IS the
   * commit's linearization point: [[commitIf]] exposes that as
   * compare-and-swap for read-modify-write callers (tracked compaction,
   * the streaming append sink), while [[commit]] retries it for
@@ -919,15 +920,23 @@ object TableManifest {
   private def writeHeadHint(fs: FileSystem, table: Path, v: Long): Unit = {
     scala.util.Try {
       val mdir = new Path(table, ManifestDir)
-      val tmp = new Path(mdir, s".head-tmp-${UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(s"""{"v":$v}""".getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      val body = s"""{"v":$v}""".getBytes(StandardCharsets.UTF_8)
       val target = new Path(mdir, HeadHintName)
-      if (!fs.rename(tmp, target)) {
-        // HDFS-style rename refuses an existing destination: replace
-        fs.delete(target, false)
-        if (!fs.rename(tmp, target)) fs.delete(tmp, false)
+      if (fs.getScheme == "file") {
+        // a hint written through the checksummed local fs left a CRC that
+        // no longer matches once the body is replaced behind its back
+        Files.deleteIfExists(localPath(new Path(mdir, s".$HeadHintName.crc")))
+        publishLocal(localPath(target), body, replace = true)
+      } else {
+        val tmp = new Path(mdir, s".head-tmp-${UUID.randomUUID()}")
+        val out = fs.create(tmp, true)
+        try out.write(body)
+        finally out.close()
+        if (!fs.rename(tmp, target)) {
+          // HDFS-style rename refuses an existing destination: replace
+          fs.delete(target, false)
+          if (!fs.rename(tmp, target)) fs.delete(tmp, false)
+        }
       }
     }
     ()
@@ -1252,24 +1261,17 @@ object TableManifest {
   }
 
   /** Atomically create the manifest file for exactly this version: local
-    * filesystems get an O_EXCL exclusive create (`CREATE_NEW` — the
-    * kernel linearizes racing creators, no check-then-act window); others
-    * get write-to-temp + rename, atomic-and-failing-on-existing on HDFS.
-    * Filesystems whose rename silently overwrites AND that are not local
-    * would re-introduce a lost-update window — none is in scope here.
-    * Returns false when another committer claimed the version. */
+    * filesystems get [[publishLocal]]'s hard link (it fails on an existing
+    * name, so the kernel linearizes racing creators with no check-then-act
+    * window); others get write-to-temp + rename, atomic-and-failing-on-
+    * existing on HDFS. Filesystems whose rename silently overwrites AND
+    * that are not local would re-introduce a lost-update window — none is
+    * in scope here. Returns false when another committer claimed the
+    * version. */
   private def createExclusive(fs: FileSystem, mdir: Path, target: Path,
       body: Array[Byte]): Boolean =
-    if (fs.getScheme == "file") {
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(target.toUri.getPath), body,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
+    if (fs.getScheme == "file") publishLocal(localPath(target), body, replace = false)
+    else {
       val tmp = new Path(mdir, s".tmp-${UUID.randomUUID()}")
       val out = fs.create(tmp, false)
       try out.write(body)
@@ -1277,6 +1279,29 @@ object TableManifest {
       if (fs.rename(tmp, target)) true
       else { fs.delete(tmp, false); false }
     }
+
+  /** Publish `body` at `target` on a local filesystem whole or not at
+    * all: it is written to a `.tmp-<uuid>` sibling first and appears under
+    * `target` in one atomic step — a hard link, which fails when `target`
+    * exists (exclusive create), or with `replace` a rename over it. An
+    * exclusive create that wrote in place (`CREATE_NEW`) would show a
+    * reader the name before the bytes, an empty or cut body. A crash leaves
+    * at most the `.tmp-` file, which readers ignore and [[vacuum]]
+    * removes. Returns false when an exclusive `target` already exists. */
+  private def publishLocal(target: java.nio.file.Path, body: Array[Byte],
+      replace: Boolean): Boolean = {
+    val tmp = target.resolveSibling(s".tmp-${UUID.randomUUID()}")
+    Files.write(tmp, body, StandardOpenOption.CREATE_NEW)
+    try {
+      if (replace) Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      else Files.createLink(target, tmp)
+      true
+    } catch {
+      case _: FileAlreadyExistsException if !replace => false
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  private def localPath(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
 
   /** Compare-and-swap commit: publish `files` as version
     * `expectedHead + 1`, succeeding ONLY if no other manifest version was
@@ -5278,8 +5303,8 @@ object TableManifest {
         deadScratch.map(s => s.getPath.getName -> s) ++
           deadDataCandidates.filterNot { case (rel, _) => derefFresh(rel) }
       }
-    // grace applies here too: an in-flight commit's .tmp- (the non-local
-    // createExclusive path) must not be deleted between write and rename
+    // grace applies here too: an in-flight commit's .tmp- must not be
+    // deleted between write and rename (or link)
     val deadTmps = mstats.filter(s =>
       (s.getPath.getName.startsWith(".tmp-") ||
         s.getPath.getName.startsWith(".head-tmp-")) &&

@@ -112,13 +112,17 @@ object FileLog {
   def appendStrings(dir: String, values: Seq[String], tsMicros: Long = 0L): Option[File] =
     append(dir, values.map(v => Record(null, v.getBytes("UTF-8"), tsMicros)))
 
-  /** Iterate a segment's records. The caller must exhaust or close. */
-  def read(file: File): Iterator[Record] with AutoCloseable =
+  /** Iterate a segment's records from its `from`-th record on (the ones
+    * before it are skipped by their length prefixes, not decoded). The
+    * caller must exhaust or close. */
+  def read(file: File, from: Long = 0L): Iterator[Record] with AutoCloseable =
     new Iterator[Record] with AutoCloseable {
       private val in = new DataInputStream(
         new BufferedInputStream(new FileInputStream(file), 1 << 16))
       private var closed = false
       private var nextRec: Record = _
+      private def skip(n: Int): Unit =
+        if (in.skipBytes(n) != n) throw new java.io.EOFException(s"$file ends inside a record")
       private def fetch(): Unit =
         if (!closed) {
           val kl = try in.readInt() catch { case _: java.io.EOFException => close(); -2 }
@@ -129,6 +133,14 @@ object FileLog {
             nextRec = Record(k, v, in.readLong())
           }
         }
+      try {
+        var left = from
+        while (left > 0) {
+          skip(math.max(in.readInt(), 0))
+          skip(math.max(in.readInt(), 0) + 8)
+          left -= 1
+        }
+      } catch { case e: Throwable => in.close(); throw e }
       fetch()
       override def hasNext: Boolean = !closed
       override def next(): Record = { val r = nextRec; fetch(); r }

@@ -25,12 +25,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `spark.readStream.format("graft-log").load(dir)`; downstream decode
   * ([[graft.streaming.EventDecode]]) is source-agnostic and works unchanged.
   *
-  * Scale notes: `planInputPartitions` yields one partition per segment (a
-  * producer batch) — at cluster scale segments map 1:1 onto tasks the way
-  * Kafka topic-partition offset ranges do, and `maxRecordsPerTrigger`
-  * bounds a micro-batch the way `maxOffsetsPerTrigger` would (admission is
-  * segment-granular: whole segments are taken until the cap is met, so
-  * offsets never split a segment).
+  * Scale notes: planning reads only segment names (the record count is in
+  * the name). The admitted record range is cut into at most
+  * `defaultParallelism` read tasks of near-equal record counts, the way
+  * Spark's `FilePartition` packs small files into splits: each task reads
+  * a contiguous run of segment slices, so a backlog of many small segments
+  * costs a few tasks rather than one task per segment, and one large
+  * segment is still read in parallel. `maxRecordsPerTrigger` bounds a
+  * micro-batch the way `maxOffsetsPerTrigger` does, at record granularity:
+  * a batch may end inside a segment, and the next one starts there.
   */
 class FileLogProvider extends TableProvider with DataSourceRegister {
 
@@ -47,9 +50,10 @@ class FileLogProvider extends TableProvider with DataSourceRegister {
     val path = opts.get("path")
     require(path != null && path.nonEmpty,
       "graft-log requires a path (`.load(dir)` or `.option(\"path\", dir)`)")
-    new FileLogTable(path,
-      Option(opts.get("maxRecordsPerTrigger")).map(_.toLong),
-      Option(opts.get("startingOffset")))
+    val cap = Option(opts.get("maxRecordsPerTrigger")).map(_.toLong)
+    // a cap of 0 would admit nothing, and the stream would never advance
+    require(cap.forall(_ > 0), s"maxRecordsPerTrigger must be positive: ${cap.get}")
+    new FileLogTable(path, cap, Option(opts.get("startingOffset")))
   }
 }
 
@@ -90,11 +94,12 @@ class FileLogTable(
     }
 }
 
-/** One input partition per committed segment; `startOffset` is the global
-  * record offset of the segment's first record (cumulative counts come free
-  * from segment names — no data reads at planning time). */
-case class FileLogInputPartition(file: String, startOffset: Long, records: Long)
-    extends InputPartition
+/** `count` records of one segment from its `first`-th record on; `offset`
+  * is the global record offset of that first record. */
+case class FileLogSlice(file: String, first: Long, count: Long, offset: Long)
+
+/** One read task: slices in offset order, contiguous across slices. */
+case class FileLogInputPartition(slices: Seq[FileLogSlice]) extends InputPartition
 
 class FileLogBatch(path: String, startingOffset: Option[String] = None)
     extends Batch {
@@ -122,9 +127,9 @@ object FileLogMicroBatchStream {
     * `format("kafka")`): "earliest" (default) → 0, "latest" → everything
     * committed at resolution time (a streaming query then reads only what
     * arrives after it starts), or a record offset that must sit on a
-    * segment boundary — batches are planned at whole-segment granularity,
-    * so an intra-segment start would silently skip the segment's tail;
-    * fail fast and list the valid boundaries instead. */
+    * segment boundary, i.e. where a producer's append began — an offset
+    * inside a segment is more likely a mistake than a wish to read half an
+    * append, so fail fast and list the valid boundaries instead. */
   def resolveStart(path: String, startingOffset: Option[String]): Long =
     startingOffset.map(_.trim.toLowerCase) match {
       case None | Some("earliest") => 0L
@@ -142,19 +147,48 @@ object FileLogMicroBatchStream {
         want
     }
 
-  /** Segments whose record range intersects [from, until) — segment
-    * boundaries always align with batch boundaries (offsets are only ever
-    * taken at whole-segment granularity), so intersection is containment. */
-  def partitionsFor(path: String, from: Long, until: Long): Array[InputPartition] = {
-    val parts = Array.newBuilder[InputPartition]
+  /** The records [from, until) as at most `parallelism` read tasks. */
+  def partitionsFor(path: String, from: Long, until: Long,
+      parallelism: Int = defaultParallelism): Array[InputPartition] = {
+    val slices = Seq.newBuilder[FileLogSlice]
     var cum = 0L
     FileLog.segments(path).foreach { s =>
-      if (cum >= from && cum + s.records <= until)
-        parts += FileLogInputPartition(s.file.getAbsolutePath, cum, s.records)
+      val lo = math.max(from, cum)
+      val hi = math.min(until, cum + s.records)
+      if (lo < hi) slices += FileLogSlice(s.file.getAbsolutePath, lo - cum, hi - lo, lo)
       cum += s.records
     }
+    pack(slices.result(), parallelism)
+  }
+
+  /** Cuts `slices` (in offset order) into runs of at most
+    * ceil(total / parallelism) records, splitting a slice where a run
+    * fills up: at most `parallelism` partitions, each contiguous. */
+  def pack(slices: Seq[FileLogSlice], parallelism: Int): Array[InputPartition] = {
+    val per = (slices.map(_.count).sum + parallelism - 1) / parallelism
+    val parts = Array.newBuilder[InputPartition]
+    var run = Vector.empty[FileLogSlice]
+    var room = per
+    slices.foreach { whole =>
+      var s = whole
+      while (s.count > 0) {
+        val take = math.min(room, s.count)
+        run :+= s.copy(count = take)
+        s = FileLogSlice(s.file, s.first + take, s.count - take, s.offset + take)
+        room -= take
+        if (room == 0) {
+          parts += FileLogInputPartition(run)
+          run = Vector.empty
+          room = per
+        }
+      }
+    }
+    if (run.nonEmpty) parts += FileLogInputPartition(run)
     parts.result()
   }
+
+  private def defaultParallelism: Int =
+    org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
 }
 
 class FileLogMicroBatchStream(
@@ -174,24 +208,14 @@ class FileLogMicroBatchStream(
   /** Plain (no-admission-control) latest: everything committed. */
   override def latestOffset(): Offset = FileLogOffset(FileLog.latestOffset(path))
 
-  /** Admission control (the `maxOffsetsPerTrigger` analogue): whole
-    * segments are admitted until the record cap is met — at least one
-    * segment per batch so the stream always advances. */
+  /** Admission control (the `maxOffsetsPerTrigger` analogue): at most
+    * `cap` records past `start`, ending anywhere, inside a segment too. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
     maxRecordsPerTrigger match {
       case None => latestOffset()
       case Some(cap) =>
         val from = FileLogMicroBatchStream.parseOffset(start.json()).recordCount
-        var cum = 0L
-        var admittedUntil = from
-        FileLog.segments(path).foreach { s =>
-          val segStart = cum
-          cum += s.records
-          if (segStart >= from &&
-              (cum - from <= cap || admittedUntil == from))
-            admittedUntil = cum
-        }
-        FileLogOffset(admittedUntil)
+        FileLogOffset(math.max(from, math.min(from + cap, FileLog.latestOffset(path))))
     }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -217,23 +241,32 @@ class FileLogMicroBatchStream(
 
 class FileLogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FileLogInputPartition]
+    val slices = partition.asInstanceOf[FileLogInputPartition].slices.iterator
     new PartitionReader[InternalRow] {
-      private val it = FileLog.read(new java.io.File(p.file))
-      private var offset = p.startOffset - 1
+      private var it: Iterator[FileLog.Record] with AutoCloseable = _
+      private var slice: FileLogSlice = _
+      private var read = 0L
       private val row = new GenericInternalRow(4)
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val r = it.next()
-          offset += 1
-          row.update(0, offset)
-          row.update(1, r.key)
-          row.update(2, r.value)
-          row.update(3, r.tsMicros)
-          true
-        } else false
+      override def next(): Boolean = {
+        while ((slice == null || read == slice.count) && slices.hasNext) {
+          close()
+          slice = slices.next()
+          it = FileLog.read(new java.io.File(slice.file), slice.first)
+          read = 0L
+        }
+        if (slice == null || read == slice.count) return false
+        if (!it.hasNext) throw new IllegalStateException(
+          s"${slice.file} ends before its record ${slice.first + read}")
+        val r = it.next()
+        row.update(0, slice.offset + read)
+        row.update(1, r.key)
+        row.update(2, r.value)
+        row.update(3, r.tsMicros)
+        read += 1
+        true
+      }
       override def get(): InternalRow = row
-      override def close(): Unit = it.close()
+      override def close(): Unit = if (it != null) it.close()
     }
   }
 }

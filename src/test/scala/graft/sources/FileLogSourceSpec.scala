@@ -239,4 +239,77 @@ class FileLogSourceSpec extends SparkSpec {
         === Set("d", "e"))
     } finally q.stop()
   }
+
+  test("maxRecordsPerTrigger splits one large segment: record-granular batches, exactly once across a restart") {
+    val dir = tmpDir("graftlog-bigseg")
+    val ckpt = tmpDir("graftlog-bigseg-ckpt")
+    val n = 72000
+    FileLog.append(dir, (0 until n).iterator.map(i =>
+      FileLog.Record(null, s"r$i".getBytes("UTF-8"), i.toLong)))
+    assert(FileLog.segments(dir).map(_.records) == Seq(n.toLong))
+    // batch id → its records' offsets; a batch replayed after the restart
+    // overwrites its own entry, so duplicates across batches are real ones
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Long]]()
+    def startQuery() = spark.readStream.format("graft-log")
+      .option("maxRecordsPerTrigger", "4000").load(dir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        val rows = batch.select("offset", "value", "timestamp").collect()
+        rows.foreach(r => assert(new String(r.getAs[Array[Byte]](1), "UTF-8") == s"r${r.getLong(0)}"))
+        batches.put(id, rows.map(_.getLong(0)).toSeq); ()
+      }.start()
+    val q1 = startQuery()
+    try {
+      // stop part-way through the drain; the restart resumes inside the segment
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (batches.size < 3 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally q1.stop()
+    val q2 = startQuery()
+    try q2.processAllAvailable() finally q2.stop()
+    import scala.jdk.CollectionConverters._
+    val sizes = batches.asScala.toSeq.sortBy(_._1).map(_._2.size)
+    assert(sizes.forall(_ <= 4000), s"a batch exceeded the cap: $sizes")
+    assert(sizes.length >= n / 4000, s"backlog not split: $sizes")
+    val offsets = batches.asScala.toSeq.sortBy(_._1).flatMap(_._2.sorted)
+    assert(offsets == (0L until n.toLong), "every record exactly once, in offset order")
+  }
+
+  test("a backlog of small segments is read in at most defaultParallelism partitions, in order") {
+    val dir = tmpDir("graftlog-pack")
+    (0 until 40).foreach(i => FileLog.appendStrings(dir, (0 until 25).map(j => s"v${25 * i + j}")))
+    val parallelism = spark.sparkContext.defaultParallelism
+    val batch = spark.read.format("graft-log").load(dir)
+    assert(batch.rdd.getNumPartitions <= parallelism)
+    val rows = batch.select(col("offset"), col("value").cast("string")).collect()
+    assert(rows.map(_.getLong(0)).toSeq == (0L until 1000L))
+    assert(rows.forall(r => r.getString(1) == s"v${r.getLong(0)}"))
+
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Long])]
+    val q = spark.readStream.format("graft-log").load(dir)
+      .writeStream.option("checkpointLocation", tmpDir("graftlog-pack-ckpt"))
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen += ((b.rdd.getNumPartitions, b.select("offset").collect().map(_.getLong(0)).toSeq)); ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    assert(seen.map(_._1).forall(_ <= parallelism), s"partitions per batch: ${seen.map(_._1)}")
+    assert(seen.flatMap(_._2) == (0L until 1000L))
+  }
+
+  test("pack cuts slices into contiguous runs, at most one per slot") {
+    import FileLogMicroBatchStream.pack
+    def runs(parts: Array[org.apache.spark.sql.connector.read.InputPartition]) =
+      parts.map(_.asInstanceOf[FileLogInputPartition].slices)
+    // one large slice is split evenly, each run starting where the last ended
+    val big = runs(pack(Seq(FileLogSlice("a", 100, 1000, 5100)), 4))
+    assert(big.map(_.map(s => (s.first, s.count, s.offset))).toSeq == Seq(
+      Seq((100L, 250L, 5100L)), Seq((350L, 250L, 5350L)),
+      Seq((600L, 250L, 5600L)), Seq((850L, 250L, 5850L))))
+    // many small slices are packed, a slice split across a run boundary
+    val small = (0 until 10).map(i => FileLogSlice(s"s$i", 0, 3, 3L * i))
+    val packed = runs(pack(small, 4))
+    assert(packed.length == 4 && packed.map(_.map(_.count).sum).toSeq == Seq(8, 8, 8, 6))
+    assert(packed.flatten.flatMap(s => s.offset until s.offset + s.count).toSeq == (0L until 30L))
+    assert(pack(Seq.empty, 4).isEmpty)
+    assert(runs(pack(small.take(1), 4)).map(_.map(_.count)).toSeq == Seq(Seq(1L), Seq(1L), Seq(1L)))
+  }
 }
