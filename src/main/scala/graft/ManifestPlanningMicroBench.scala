@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
@@ -63,6 +62,24 @@ object ManifestPlanningMicroBench {
       med
     }
 
+    /** Commit `names` as version 2 of the tracked table at `dir`: a
+      * checkpoint that, with `carried`, holds the head's schema and a
+      * 4 KiB inventory entry per name, so planning runs without any file
+      * existing. Returns the body size in bytes. */
+    def fabricate(dir: String, names: Seq[String],
+        carried: Boolean = true): Int = {
+      val schema =
+        if (carried) graft.ops.TableManifest.readSchema(spark, dir) else None
+      val fstat =
+        if (carried) names.map(_ -> ((4096L, 1700000000000L))).toMap
+        else Map.empty[String, (Long, Long)]
+      val body = graft.ops.ManifestCodec.encodeCheckpoint(2L, "bench",
+        graft.ops.TableManifest.Snap(names.toVector, schema, None, Map.empty,
+          Map.empty, Map.empty, fstat, None, None, 2L))
+      Files.write(Paths.get(dir, "_manifest", f"v${2L}%020d.json"), body)
+      body.length
+    }
+
     for (files <- Seq(128, 512, 2048)) {
       val dir = Files.createTempDirectory(s"gm-plan-$files").toString
       spark.range(files.toLong * 100)
@@ -85,11 +102,8 @@ object ManifestPlanningMicroBench {
       // strip the schema the way a pre-round-12 build rendered manifests:
       // same file list, no schemab64 field → readers fall back to merged
       // footer inference
-      val names = graft.ops.TableManifest.readHead(spark, dir).get._2
-      val body = s"""{"version":2,"token":"bench","files":[""" +
-        names.map("\"" + _ + "\"").mkString(",") + "]}"
-      Files.write(Paths.get(dir, "_manifest", f"v${2L}%020d.json"),
-        body.getBytes(StandardCharsets.UTF_8))
+      fabricate(dir, graft.ops.TableManifest.readHead(spark, dir).get._2,
+        carried = false)
       require(graft.ops.TableManifest.readSchema(spark, dir).isEmpty)
       val fallback = timeIt(s"footer-inf f=$files") {
         spark.read.format("graft-manifest").load(dir).schema
@@ -120,25 +134,14 @@ object ManifestPlanningMicroBench {
           concat(lit("r"), col("id")).as("s"))
         .repartition(1).write.mode("overwrite").parquet(dir)
       graft.ops.TableManifest.init(spark, dir)
-      val v1 = new String(Files.readAllBytes(
-        new java.io.File(dir, "_manifest").listFiles()
-          .filter(_.getName.matches("v\\d+\\.json")).head.toPath),
-        StandardCharsets.UTF_8)
-      val schemaB64 = """"schemab64":"([A-Za-z0-9+/=]*)"""".r
-        .findFirstMatchIn(v1).get.group(1)
-      val names = (0 until files).map(i => f"sql-00000000-p$i%07d.parquet")
-      val body = s"""{"version":2,"token":"bench",""" +
-        s""""schemab64":"$schemaB64",""" +
-        names.map("\"" + _ + "\"").mkString("\"files\":[", ",", "],") +
-        names.map(n => "\"" + n + "\":[4096,1700000000000]")
-          .mkString("\"filestat\":{", ",", "}") + "}"
-      Files.write(Paths.get(dir, "_manifest", f"v${2L}%020d.json"),
-        body.getBytes(StandardCharsets.UTF_8))
-      val t = timeIt(f"plan 1M-class f=$files (${body.length / 1024}KiB body)") {
+      val bodyBytes = fabricate(dir,
+        (0 until files).map(i => f"sql-00000000-p$i%07d.parquet"))
+      val t = timeIt(f"plan 1M-class f=$files (${bodyBytes / 1024}KiB body)") {
         graft.ops.TableManifest.readTable(spark, dir)
           .filter(col("k") === 3L).queryExecution.executedPlan
       }
-      println(f"  -> ${t * 1000}%.0f ms for $files files, body ${body.length / 1048576.0}%.1f MiB")
+      println(f"  -> ${t * 1000}%.0f ms for $files files, " +
+        f"body ${bodyBytes / 1048576.0}%.1f MiB")
 
       // ---- COMMIT cost (round 15, the log-structured protocol's claim):
       // appending ONE file to this head must cost O(delta record) — a
@@ -164,9 +167,8 @@ object ManifestPlanningMicroBench {
         val mdir = new java.io.File(dir, "_manifest")
         val head = mdir.listFiles().filter(_.getName.matches("v\\d+\\.json"))
           .maxBy(_.getName)
-        val bytes = Files.readAllBytes(head.toPath)
-        !new String(bytes, 0, math.min(bytes.length, 200),
-          StandardCharsets.UTF_8).contains("\"delta\":1")
+        graft.ops.ManifestCodec.topLevelLong(head.getName,
+          Files.readAllBytes(head.toPath), "delta").isEmpty
       }
       val deltas = scala.collection.mutable.ArrayBuffer.empty[Double]
       var checkpoint = -1.0
@@ -202,20 +204,7 @@ object ManifestPlanningMicroBench {
         spark.range(10).select(col("id"), (col("id") % 7).as("k"))
           .repartition(1).write.mode("overwrite").parquet(dir)
         graft.ops.TableManifest.init(spark, dir)
-        val v1 = new String(Files.readAllBytes(
-          new java.io.File(dir, "_manifest").listFiles()
-            .filter(_.getName.matches("v\\d+\\.json")).head.toPath),
-          StandardCharsets.UTF_8)
-        val schemaB64 = """"schemab64":"([A-Za-z0-9+/=]*)"""".r
-          .findFirstMatchIn(v1).get.group(1)
-        val names = (0 until 100000).map(i => f"sql-0000000$t-p$i%07d.parquet")
-        val body = s"""{"version":2,"token":"bench",""" +
-          s""""schemab64":"$schemaB64",""" +
-          names.map("\"" + _ + "\"").mkString("\"files\":[", ",", "],") +
-          names.map(n => "\"" + n + "\":[4096,1700000000000]")
-            .mkString("\"filestat\":{", ",", "}") + "}"
-        Files.write(Paths.get(dir, "_manifest", f"v${2L}%020d.json"),
-          body.getBytes(StandardCharsets.UTF_8))
+        fabricate(dir, (0 until 100000).map(i => f"sql-0000000$t-p$i%07d.parquet"))
         dir
       }
       def sweep(): Double = {
@@ -256,23 +245,21 @@ object ManifestPlanningMicroBench {
         .repartition(1).write.mode("overwrite").parquet(dir)
       graft.ops.TableManifest.init(spark, dir)
       val mdir = Paths.get(dir, "_manifest")
-      val v1 = new String(Files.readAllBytes(
+      val v1 = graft.ops.ManifestCodec.decode(1L, Files.readAllBytes(
         mdir.toFile.listFiles().filter(_.getName.endsWith(".json"))
-          .head.toPath), StandardCharsets.UTF_8)
-      // each fabricated version re-lists v1's exact body under its own
+          .head.toPath)).toOption.get
+      // each fabricated version re-lists v1's snapshot under its own
       // version number — valid standalone checkpoints, so resolution
       // never replays; only the freshness check's cost varies
       (2 to versions).foreach { v =>
         Files.write(mdir.resolve(f"v$v%020d.json"),
-          v1.replaceFirst("\"version\":1", s""""version":$v""")
-            .getBytes(StandardCharsets.UTF_8))
+          graft.ops.ManifestCodec.encodeCheckpoint(v, "bench", v1))
       }
       // the hint is normally written through the (checksummed) Hadoop
       // fs; fabricating it with raw nio must drop the stale CRC or the
       // hint read hits a ChecksumException and silently falls back
       Files.deleteIfExists(mdir.resolve("._head.crc"))
-      Files.write(mdir.resolve("_head"),
-        s"""{"v":$versions}""".getBytes(StandardCharsets.UTF_8))
+      Files.write(mdir.resolve("_head"), s"""{"v":$versions}""".getBytes("UTF-8"))
       val hinted = timeIt(f"head-read hinted   n=$versions", reps = 9) {
         graft.ops.TableManifest.readHead(spark, dir)
       }
@@ -326,20 +313,7 @@ object ManifestPlanningMicroBench {
           concat(lit("r"), col("id")).as("s"))
         .repartition(1).write.mode("overwrite").parquet(dir)
       graft.ops.TableManifest.init(spark, dir)
-      val v1 = new String(Files.readAllBytes(
-        new java.io.File(dir, "_manifest").listFiles()
-          .filter(_.getName.matches("v\\d+\\.json")).head.toPath),
-        StandardCharsets.UTF_8)
-      val schemaB64 = """"schemab64":"([A-Za-z0-9+/=]*)"""".r
-        .findFirstMatchIn(v1).get.group(1)
-      val names = (0 until files).map(i => f"sql-00000000-p$i%07d.parquet")
-      val body = s"""{"version":2,"token":"bench",""" +
-        s""""schemab64":"$schemaB64",""" +
-        names.map("\"" + _ + "\"").mkString("\"files\":[", ",", "],") +
-        names.map(n => "\"" + n + "\":[4096,1700000000000]")
-          .mkString("\"filestat\":{", ",", "}") + "}"
-      Files.write(Paths.get(dir, "_manifest", f"v${2L}%020d.json"),
-        body.getBytes(StandardCharsets.UTF_8))
+      fabricate(dir, (0 until files).map(i => f"sql-00000000-p$i%07d.parquet"))
       spark.conf.set("spark.graft.manifest.checkpointInterval", "1")
       // the declared schema is re-read per commit: after the renames the
       // appended batch must declare the CURRENT logical names (declaring

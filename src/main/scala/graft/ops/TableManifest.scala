@@ -1,13 +1,13 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption, StandardOpenOption}
-import java.util.{Base64, UUID}
+import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Reader-atomic, LOG-STRUCTURED commit protocol for raw parquet
   * directories — the public Delta/Iceberg core idea at file-listing
@@ -21,10 +21,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * a CHECKPOINT — the complete snapshot
   * `{"version":N,…,"files":["name", ...]}` of dir-relative names — or a
   * DELTA record (`"delta":1,"base":B` + added/removed names + stat
-  * overlays; see [[DeltaBaseRe]]), the log-structured form that makes a
-  * commit cost O(what changed) instead of O(table): the hot append path
-  * writes ~batch-sized records ([[commitAppendDelta]] — measured 28 ms
-  * at 1M files vs the 11 s full-body render+parse it replaced), and a
+  * overlays; [[ManifestCodec]] owns the body format), the log-structured
+  * form that makes a commit cost O(what changed) instead of O(table):
+  * the hot append path writes ~batch-sized records ([[commitAppendDelta]]
+  * — measured 28 ms at 1M files vs the 11 s full-body render+parse it
+  * replaced), and a
   * checkpoint re-anchors the chain every [[checkpointInterval]] commits
   * (or whenever the delta would not be materially smaller — snapshot
   * replaces, analyze sweeps), bounding every replay. Readers list
@@ -57,12 +58,14 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * Deliberately NOT here: optimistic-conflict RESOLUTION beyond
   * last-writer-wins / CAS-retry (no column-level conflict analysis — a
   * racing writer re-reads and re-derives), and multi-table transactions
-  * — at that point use a real table format. File names are written by
-  * this module (UUID-based ASCII), so the JSON needs no string
-  * escaping.
+  * — at that point use a real table format. Bodies are JSON written and
+  * read by [[ManifestCodec]]'s streaming codec, so stat column names and
+  * string bounds may hold any Unicode; file names may not hold quotes or
+  * `[]{}\` (victim reads pass them to `spark.read.parquet` as glob
+  * patterns).
   *
   * The manifest DOES carry the table schema (base64 of Spark's schema
-  * JSON — base64's charset keeps the no-escaping invariant): without it,
+  * JSON): without it,
   * every read must either sample ONE footer (silently dropping columns a
   * later commit added — the order-dependent bug
   * `ManifestProviderEvolutionSpec` pins) or merge ALL footers — an
@@ -117,56 +120,6 @@ object TableManifest {
   val BloomBits = 8192
   val BloomHashes = 6
 
-  /** String stat values must keep the manifest's no-escaping invariant: a
-    * value outside this charset (or too long / possibly truncated by the
-    * parquet writer) is DROPPED, which only costs pruning power, never
-    * correctness. */
-  private val SafeStatValue = "[A-Za-z0-9_.:/+=@%-]{0,64}".r
-
-  /** The `"files":[...]` array specifically — anchored on its key, never on
-    * the first/last bracket of the body, because the trailing `stats`
-    * object also contains brackets. File names are this module's ASCII
-    * UUIDs, so neither quotes nor brackets appear inside a name. */
-  private def parseFiles(json: String): Seq[String] =
-    parseNameArray(json, "files")
-
-  /** A top-level `"<key>":["name", ...]` array of file names. The name
-    * sections (`files` / `adds` / `removes`) are always rendered BEFORE
-    * the stat objects, so a stats column that happens to share a key name
-    * can never win the indexOf. */
-  private def parseNameArray(json: String, key: String): Seq[String] = {
-    val k = "\"" + key + "\":["
-    val start = json.indexOf(k)
-    require(start >= 0, s"malformed manifest (missing $key): $json")
-    val end = json.indexOf(']', start)
-    require(end > start, s"malformed manifest: $json")
-    "\"([^\"]*)\"".r.findAllMatchIn(json.substring(start + k.length, end))
-      .map(_.group(1)).toSeq
-  }
-
-  private val HwmRe = """"hwm":(-?[0-9]+)""".r
-  private val StatsVRe = """"statsv":([0-9]+)""".r
-  /** Commit wall-clock millis recorded IN the manifest body ([[commitIf]]
-    * stamps it). `TIMESTAMP AS OF`, [[history]], and DESCRIBE DETAIL read
-    * this instead of the manifest FILE's mtime: filesystem mtimes have
-    * 1-second granularity on many local filesystems and unreliable
-    * semantics on object stores, while the recorded stamp is exact and
-    * survives a manifest copy/backup-restore. Absent on manifests written
-    * before the field (readers fall back to mtime). */
-  private val CtimeRe = """"ctime":([0-9]+)""".r
-  private def parseCtime(json: String): Option[Long] =
-    CtimeRe.findFirstMatchIn(json).map(_.group(1).toLong)
-
-  /** DELTA-record marker: a manifest body carrying `"delta":1,"base":B` is
-    * a LOG record (added/removed names + stat overlays relative to the
-    * resolved state of version-1, with `B` the CHECKPOINT version its
-    * replay chain starts at), not a full snapshot. The marker string can
-    * never occur in a full body: the only writer-controlled keys are this
-    * module's, stat column names render as `"name":[` / `"name":"` (a
-    * bracket or quote after the colon, never the bare digit `1` followed
-    * by `"base"`), and every value charset is guarded at render. Written
-    * immediately after the token so detection needs no full-body scan. */
-  private val DeltaBaseRe = """"delta":1,"base":([0-9]+)""".r
   /** The streaming append sink's batch-stamped data-file names
     * (`b<batchId>-<uuid>-pN.parquet`) — [[vacuum]] uses the id to protect
     * not-yet-committed batches. */
@@ -193,81 +146,6 @@ object TableManifest {
     case _ => false
   }
 
-  /** Numeric-stats FORMAT version. Bumped to 2 when timestamp footer
-    * bounds started being normalized to unix-micros: a manifest written
-    * before the bump may hold a timestamp column's bounds in RAW writer
-    * units (e.g. millis), and re-interpreting those as micros would prune
-    * day slices 1000× off — silently wrong results. Readers therefore
-    * IGNORE the numeric `stats` of any manifest whose `statsv` predates
-    * the current format (conservative: every file stays a candidate until
-    * re-analyzed under the new format); string stats and blooms are
-    * unit-free and unaffected. */
-  private val StatsFormat = 2L
-  private val FileStatsRe = """"([^"]+)":\{([^}]*)\}""".r
-  private val ColRangeRe = """"([^"]+)":\[(-?[0-9]+),(-?[0-9]+)\]""".r
-  private val ColStrRangeRe = """"([^"]+)":\["([^"]*)","([^"]*)"\]""".r
-
-  /** The body of the top-level `"<key>":{...}` object. Values are
-    * charset-guarded (never contain braces), so depth counting is exact. */
-  private def sliceObject(json: String, key: String): Option[String] = {
-    val k = "\"" + key + "\":{"
-    val start = json.indexOf(k)
-    if (start < 0) return None
-    var depth = 1
-    var i = start + k.length
-    while (depth > 0 && i < json.length) {
-      json(i) match {
-        case '{' => depth += 1
-        case '}' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    Some(json.substring(start + k.length, i - 1))
-  }
-
-  /** The `"stats":{...}` object, absent on manifests written before the
-    * field existed — and treated as absent when written under an older
-    * [[StatsFormat]] (see there: pre-2 timestamp bounds may be in raw
-    * writer units; carrying or pruning on them would be unsound). */
-  private def parseStats(json: String): FileStats = {
-    val fmt = StatsVRe.findFirstMatchIn(json).map(_.group(1).toLong)
-    if (!fmt.contains(StatsFormat)) return Map.empty
-    sliceObject(json, "stats").map { body =>
-      FileStatsRe.findAllMatchIn(body).map { fm =>
-        fm.group(1) -> ColRangeRe.findAllMatchIn(fm.group(2)).map { cm =>
-          cm.group(1) -> (cm.group(2).toLong, cm.group(3).toLong)
-        }.toMap
-      }.toMap
-    }.getOrElse(Map.empty)
-  }
-
-  /** The `"sstats":{...}` string-stats object. */
-  private def parseStringStats(json: String): FileStringStats =
-    sliceObject(json, "sstats").map { body =>
-      FileStatsRe.findAllMatchIn(body).map { fm =>
-        fm.group(1) -> ColStrRangeRe.findAllMatchIn(fm.group(2)).map { cm =>
-          cm.group(1) -> (cm.group(2), cm.group(3))
-        }.toMap
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  private val ColBloomRe = """"([^"]+)":"([0-9a-f]*)"""".r
-
-  private val SchemaB64Re = """"schemab64":"([A-Za-z0-9+/=]*)"""".r
-
-  /** The DECLARED partition schema of a hive-partitioned table — the
-    * name-inferred partition columns (with their inferred types) persisted
-    * at [[init]]/[[publishPartitioned]] and carried through every later
-    * commit, so the table's served schema is STABLE: a retention delete
-    * that drops the last file of every partition (or an empty partitioned
-    * table between an erase-all and its next append) must not silently
-    * stop serving `bucket`/`d` and break queries that reference them.
-    * Live reads still type partition VALUES from the live names (the
-    * values and their types must agree with what the scan serves); this
-    * field is the fallback when no name is left to infer from, and the
-    * writers' source of the partition column CHAIN. Absent on flat
-    * tables and manifests written before the field. */
   /** One COLUMN-MAPPING entry of a renamed column (`ALTER TABLE …
     * RENAME COLUMN`): logical column `to` is physically stored as
     * `from` in exactly the data files named in `carriers` — the files
@@ -305,216 +183,29 @@ object TableManifest {
   private[graft] final case class Dropped(name: String,
       carriers: Set[String])
 
-  /** The column-mapping field: base64 of a compact JSON array (like the
-    * schemas — one regex parse, zero interaction with the body's other
-    * regex-parsed sections, and the no-escaping invariant holds
-    * trivially). Carried by CHECKPOINT bodies only; delta records
-    * INHERIT the previous state's entries minus their removed files
-    * (carriers are O(files-at-rename) — restating them per record would
-    * break the O(delta) commit hot path), which is why any commit that
-    * CHANGES the mapping forces a checkpoint.
-    *
-    * Carrier-set encoding: carriers are always a subset of the same
-    * body's `files` array, so a checkpoint stores each set as `carrbm` —
-    * a base64 BITMAP over the body's SORTED file list (bit i = files(i)
-    * is a carrier) — instead of restating O(carriers) names per entry: k
-    * chained renames on a 1M-file table cost k × 125 KB of bitmap
-    * instead of k × ~40 MB of names, keeping checkpoint render/replay
-    * within noise of an un-renamed table's. The explicit
-    * `"carriers":[…]` shape is still parsed (pre-round-17 bodies) and
-    * still written for the never-expected case of a carrier missing
-    * from the file list (soundness over compactness). The same array
-    * carries [[Dropped]] tombstones as `{"dropped":name,…}` entries. */
-  private val ColmapB64Re = """"colmapb64":"([A-Za-z0-9+/=]*)"""".r
-  private val ColmapEntryRe =
-    ("""\{"to":"([^"]*)","from":"([^"]*)",""" +
-      """(?:"carriers":\[([^\]]*)\]|"carrbm":"([A-Za-z0-9+/=]*)")\}""").r
-  private val DroppedEntryRe =
-    ("""\{"dropped":"([^"]*)",""" +
-      """(?:"carriers":\[([^\]]*)\]|"carrbm":"([A-Za-z0-9+/=]*)")\}""").r
-
-  /** Bitmap over `sortedFiles` for a carrier set, or None when some
-    * carrier is not in the list (fall back to the explicit shape). One
-    * pass over the FILE list with a set-membership probe per name — no
-    * files→index map is ever built (a 1M-entry boxed map per checkpoint
-    * was the measurable cost of the encoding); every carrier found ⟺
-    * the set bits count matches the set's size (names are distinct). */
-  private def carrierBitmap(carriers: Set[String],
-      sortedFiles: Seq[String]): Option[String] = {
-    val n = sortedFiles.length
-    val bytes = new Array[Byte]((n + 7) / 8)
-    var found = 0
-    var i = 0
-    val it = sortedFiles.iterator
-    while (it.hasNext) {
-      if (carriers(it.next())) {
-        bytes(i >> 3) = (bytes(i >> 3) | (1 << (i & 7))).toByte
-        found += 1
-      }
-      i += 1
-    }
-    if (found == carriers.size)
-      Some(Base64.getEncoder.encodeToString(bytes))
-    else None
-  }
-
-  private def carriersOf(explicit: String, bm: String,
-      sortedFiles: Seq[String]): Set[String] =
-    if (explicit != null)
-      "\"([^\"]*)\"".r.findAllMatchIn(explicit).map(_.group(1)).toSet
-    else {
-      val bytes = Base64.getDecoder.decode(bm)
-      val out = Set.newBuilder[String]
-      var i = 0
-      val n = math.min(sortedFiles.length, bytes.length * 8)
-      while (i < n) {
-        if ((bytes(i >> 3) & (1 << (i & 7))) != 0) out += sortedFiles(i)
-        i += 1
-      }
-      out.result()
-    }
-
-  private[graft] def encodeColmap(renames: Seq[Rename],
-      dropped: Seq[Dropped], sortedFiles: Seq[String]): String = {
-    renames.foreach { r =>
-      require(r.to.matches("[A-Za-z_]\\w*") && r.from.matches("[A-Za-z_]\\w*"),
-        s"rename entry ${r.from} -> ${r.to}: plain identifiers only " +
-          "(no-escaping invariant)")
-    }
-    dropped.foreach { d =>
-      require(d.name.matches("[A-Za-z_]\\w*"),
-        s"drop tombstone ${d.name}: plain identifiers only " +
-          "(no-escaping invariant)")
-    }
-    def carr(cs: Set[String]): String =
-      carrierBitmap(cs, sortedFiles) match {
-        case Some(bm) => s""""carrbm":"$bm""""
-        case None =>
-          requireJsonSafeNames(cs.toSeq)
-          "\"carriers\":[" +
-            cs.toSeq.sorted.map("\"" + _ + "\"").mkString(",") + "]"
-      }
-    val json = (renames.map { r =>
-      s"""{"to":"${r.to}","from":"${r.from}",""" + carr(r.carriers) + "}"
-    } ++ dropped.map { d =>
-      s"""{"dropped":"${d.name}",""" + carr(d.carriers) + "}"
-    }).mkString("[", ",", "]")
-    Base64.getEncoder.encodeToString(json.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private[graft] def parseColmap(json: String,
-      sortedFiles: Seq[String]): (Seq[Rename], Seq[Dropped]) =
-    ColmapB64Re.findFirstMatchIn(json).map { m =>
-      val decoded = new String(Base64.getDecoder.decode(m.group(1)),
-        StandardCharsets.UTF_8)
-      val renames = ColmapEntryRe.findAllMatchIn(decoded).map { em =>
-        Rename(em.group(1), em.group(2),
-          carriersOf(em.group(3), em.group(4), sortedFiles))
-      }.toSeq
-      val dropped = DroppedEntryRe.findAllMatchIn(decoded).map { em =>
-        Dropped(em.group(1),
-          carriersOf(em.group(2), em.group(3), sortedFiles))
-      }.toSeq
-      (renames, dropped)
-    }.getOrElse((Seq.empty, Seq.empty))
-
-  private val PartSchemaB64Re = """"partschemab64":"([A-Za-z0-9+/=]*)"""".r
-  private def parsePartSchema(json: String): Option[StructType] =
-    PartSchemaB64Re.findFirstMatchIn(json).flatMap { m =>
-      scala.util.Try {
-        DataType.fromJson(new String(
-          Base64.getDecoder.decode(m.group(1)), StandardCharsets.UTF_8))
-          .asInstanceOf[StructType]
-      }.toOption
-    }
-
-  /** The head's declared partition schema (see [[PartSchemaB64Re]]) —
-    * `None` on flat tables and pre-field manifests. */
+  /** The DECLARED partition schema of a hive-partitioned table — the
+    * name-inferred partition columns (with their inferred types) persisted
+    * at [[init]]/[[publishPartitioned]] and carried through every later
+    * commit, so the table's served schema is STABLE: a retention delete
+    * that drops the last file of every partition (or an empty partitioned
+    * table between an erase-all and its next append) must not silently
+    * stop serving `bucket`/`d` and break queries that reference them.
+    * Live reads still type partition VALUES from the live names (the
+    * values and their types must agree with what the scan serves); this
+    * field is the fallback when no name is left to infer from, and the
+    * writers' source of the partition column CHAIN. `None` on flat tables
+    * and manifests written before the field. */
   def readPartitionSchema(spark: SparkSession, dir: String): Option[StructType] =
     headSnap(spark, dir).flatMap(_._2.partSchema)
 
-  /** Stored deep-nullable: the manifest schema describes what a SCAN of
-    * the table serves, and a file scan serves every column nullable (any
-    * listed file may predate the column) — the same view merged footer
-    * inference reports, so schema-carried and fallback reads agree
-    * exactly. */
-  private def encodeSchema(s: StructType): String =
-    Base64.getEncoder.encodeToString(
-      SchemaBridge.asNullable(s).json.getBytes(StandardCharsets.UTF_8))
-
-  /** The manifest-carried table schema, absent on manifests written before
-    * the field existed. A value that fails to decode is treated as absent
-    * (the reader falls back to merged footer inference — costs planning
-    * time, never correctness), but the field is only ever written by
-    * [[render]] from a real `StructType`, so that path is corruption-only. */
-  private def parseSchema(json: String): Option[StructType] =
-    SchemaB64Re.findFirstMatchIn(json).flatMap { m =>
-      scala.util.Try {
-        DataType.fromJson(new String(
-          Base64.getDecoder.decode(m.group(1)), StandardCharsets.UTF_8))
-          .asInstanceOf[StructType]
-      }.toOption
-    }
-
-  /** The `"filestat":{"<name>":[len,mtimeMs],...}` object: the exact
-    * byte length (the parquet footer lives at `len - 8`, so this must be
-    * byte-exact — it comes from a real `FileStatus`, never an estimate)
-    * and modification time of every data file, captured at commit. This
-    * is what lets scan PLANNING fabricate the file index from the
-    * manifest alone — zero filesystem calls per query, the flat-cost
-    * planning a million-file table needs — instead of stat-ing every
-    * listed file. */
-  private val FileStatRe = """"([^"]+)":\[(-?[0-9]+),(-?[0-9]+)\]""".r
-  private def parseFileStat(json: String): Map[String, (Long, Long)] =
-    sliceObject(json, "filestat").map { body =>
-      FileStatRe.findAllMatchIn(body).map { m =>
-        m.group(1) -> (m.group(2).toLong, m.group(3).toLong)
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** The DELETION-VECTOR section: data file → (sidecar name under
-    * `_dv/`, deleted-row cardinality). Rendered BEFORE the stat objects
-    * (the name-section ordering rule — a stats column or file named
-    * "dvs" must never win the indexOf), carried by checkpoints like the
-    * stats and OVERLAID by delta records (a DELETE marking rows in an
-    * existing file is the O(delta) hot path). Entries drop with their
-    * data file — a rewrite/compaction materializes the deletions, so the
-    * removed file takes its dv reference with it; [[vacuum]] reclaims
-    * unreferenced sidecars. */
-  private val DvEntryRe = """"([^"]+)":\["([^"]+)",(-?[0-9]+)\]""".r
-  private def parseDvs(json: String): Map[String, (String, Long)] =
-    sliceObject(json, "dvs").map { body =>
-      DvEntryRe.findAllMatchIn(body).map { m =>
-        m.group(1) -> (m.group(2), m.group(3).toLong)
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** Leading-comma section string, like the [[statSections]] pieces. */
-  private def dvsSection(dvs: Map[String, (String, Long)]): String =
-    if (dvs.isEmpty) ""
-    else {
-      requireJsonSafeNames(dvs.keys.toSeq)
-      requireJsonSafeNames(dvs.values.map(_._1).toSeq)
-      dvs.toSeq.sortBy(_._1).map { case (f, (dv, card)) =>
-        "\"" + f + "\":[\"" + dv + "\"," + card + "]"
-      }.mkString(""","dvs":{""", ",", "}")
-    }
-
   /** The head manifest's per-file (length, mtimeMs) inventory — empty on
     * manifests written before the field existed (planning then falls back
-    * to one directory listing). */
+    * to one directory listing). The length is byte-exact (the parquet
+    * footer lives at `len - 8`; it comes from a real `FileStatus`, never
+    * an estimate): this is what lets scan PLANNING fabricate the file
+    * index from the manifest alone — zero filesystem calls per query. */
   def readFileStat(spark: SparkSession, dir: String): Map[String, (Long, Long)] =
     headSnap(spark, dir).map(_._2.fstat).getOrElse(Map.empty)
-
-  /** The `"bloom":{...}` point-lookup object. */
-  private def parseBloom(json: String): FileBloom =
-    sliceObject(json, "bloom").map { body =>
-      FileStatsRe.findAllMatchIn(body).map { fm =>
-        fm.group(1) -> ColBloomRe.findAllMatchIn(fm.group(2)).map { cm =>
-          cm.group(1) -> cm.group(2)
-        }.toMap
-      }.toMap
-    }.getOrElse(Map.empty)
 
   /** Head (version, files, stream high-water mark). The hwm is writer
     * metadata carried INSIDE the manifest (see [[commit]]) so maintenance
@@ -571,7 +262,10 @@ object TableManifest {
     * checkpoint version the chain starts at (= the version itself for a
     * checkpoint body) — what a successor commit records as its replay
     * anchor. Immutable once resolved (manifests are write-once), so every
-    * cache below is sound by construction. */
+    * cache below is sound by construction. `dvs` maps a data file to its
+    * deletion-vector sidecar under `_dv/` and deleted-row count; an entry
+    * drops with its data file (a rewrite materializes the deletions) and
+    * [[vacuum]] reclaims unreferenced sidecars. */
   private[graft] final case class Snap(
       files: Seq[String],
       schema: Option[StructType],
@@ -593,16 +287,13 @@ object TableManifest {
     * and the COMPLETE output schema / partition declaration (tiny,
     * O(columns), so each record is self-contained on those and replay
     * never has to inherit them). */
-  private final case class DeltaRec(base: Long, adds: Seq[String],
+  private[graft] final case class DeltaRec(base: Long, adds: Seq[String],
       removes: Seq[String], schema: Option[StructType],
       partSchema: Option[StructType], stats: FileStats,
       sstats: FileStringStats, bloom: FileBloom,
       fstat: Map[String, (Long, Long)], hwm: Option[Long],
       ctime: Option[Long],
       dvs: Map[String, (String, Long)] = Map.empty)
-
-  private def parseHwm(json: String): Option[Long] =
-    HwmRe.findFirstMatchIn(json).map(_.group(1).toLong)
 
   /** READER PROTOCOL STAMP. A body whose content an old build would
     * silently misread — deleted rows served because the `dvs` section
@@ -618,66 +309,16 @@ object TableManifest {
     * grammar in full — any future change to a stamped section's grammar
     * that an existing build would misread must mint a NEW name, never
     * widen an old one (widening would defeat the stamp for every build
-    * already in the field). */
+    * already in the field). `utf8strings` ([[ManifestCodec.Utf8Strings]])
+    * covers string values outside the charset older builds' regex parser
+    * could read, and string bounds compared in UTF-8 byte order. */
   private[graft] val SupportedReaderFeatures: Set[String] =
-    Set("colmap", "dvs")
-  private val FeaturesRe = """"features":\[([^\]]*)\]""".r
+    Set("colmap", "dvs", ManifestCodec.Utf8Strings)
 
   /** Named refusal for version skew: the manifest requires a reader
     * capability this build does not implement. */
   final class UnsupportedTableFeatureException(msg: String)
     extends RuntimeException(msg)
-
-  private def featuresSection(features: Set[String]): String =
-    if (features.isEmpty) ""
-    else {
-      requireJsonSafeNames(features.toSeq)
-      features.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString(""""features":[""", ",", "],")
-    }
-
-  private def parseFeatures(body: String): Set[String] =
-    FeaturesRe.findFirstMatchIn(body).map { m =>
-      "\"([^\"]*)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet
-    }.getOrElse(Set.empty)
-
-  private def requireSupportedFeatures(v: Long, body: String): Unit = {
-    val unknown = parseFeatures(body) -- SupportedReaderFeatures
-    if (unknown.nonEmpty)
-      throw new UnsupportedTableFeatureException(
-        s"manifest v$v requires reader feature(s) " +
-          s"${unknown.toSeq.sorted.mkString("[", ", ", "]")} this build " +
-          "does not implement (supported: " +
-          s"${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}); " +
-          "upgrade the engine to read this table")
-  }
-
-  /** Parse one manifest body: `Right(Snap)` for a checkpoint (full
-    * snapshot), `Left(DeltaRec)` for a delta record. Refuses first —
-    * loudly, by name — when the body stamps a required reader feature
-    * this build does not know (see [[SupportedReaderFeatures]]). */
-  private def parseBody(v: Long, body: String): Either[DeltaRec, Snap] = {
-    requireSupportedFeatures(v, body)
-    DeltaBaseRe.findFirstMatchIn(body) match {
-      case Some(m) => Left(DeltaRec(m.group(1).toLong,
-        parseNameArray(body, "adds"), parseNameArray(body, "removes"),
-        parseSchema(body), parsePartSchema(body), parseStats(body),
-        parseStringStats(body), parseBloom(body), parseFileStat(body),
-        parseHwm(body), parseCtime(body), dvs = parseDvs(body)))
-      // files as a Vector: the append fast path advances it by
-      // structural sharing (`++` of a small batch is O(log n + batch))
-      case None =>
-        // the body's files array is rendered SORTED — exactly the order
-        // the colmap's carrier bitmaps index into
-        val files = parseFiles(body).toVector
-        val (renames, dropped) = parseColmap(body, files)
-        Right(Snap(files, parseSchema(body),
-          parsePartSchema(body), parseStats(body), parseStringStats(body),
-          parseBloom(body), parseFileStat(body), parseHwm(body),
-          parseCtime(body), base = v, renames = renames, dropped = dropped,
-          dvs = parseDvs(body)))
-    }
-  }
 
   /** Apply one delta record to the previous version's resolved state —
     * EXACTLY the merge a full commit's carry used to bake into the body:
@@ -702,8 +343,9 @@ object TableManifest {
           if (merged.isEmpty) m else m.updated(f, merged)
         }
       // column-mapping entries INHERIT through delta records (a record
-      // never restates them — see ColmapB64Re); with nothing removed the
-      // carrier sets are untouched (adds are post-rename files)
+      // never restates them — see ManifestCodec.encodeColmap); with
+      // nothing removed the carrier sets are untouched (adds are
+      // post-rename files)
       Snap(s.files ++ d.adds, d.schema, d.partSchema,
         overlay(s.stats, d.stats), overlay(s.sstats, d.sstats),
         overlay(s.bloom, d.bloom), s.fstat ++ d.fstat,
@@ -751,9 +393,9 @@ object TableManifest {
       .flatMap(s => versionOf(s.getPath.getName).map(_ -> s)).toMap
   }
 
-  private def readBody(fs: FileSystem, path: Path): String = {
+  private def readBody(fs: FileSystem, path: Path): Array[Byte] = {
     val in = fs.open(path)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    try in.readAllBytes()
     finally in.close()
   }
 
@@ -765,9 +407,10 @@ object TableManifest {
     * 1M-file head is ~100 MB of parsed names+inventory: memory-motivated,
     * sized for a driver actively planning against a handful of tables.
     * This is what collapses the metadata envelope's PER-QUERY cost — an
-    * O(files) body read + regex parses, measured 0.74 s at 100k files /
-    * 11 s at 1M — to one `_manifest/` listing for every read after the
-    * first against an unchanged version. */
+    * O(files) body read + parse, measured 0.74 s at 100k files / 11 s at
+    * 1M with the regex parser [[ManifestCodec]] replaced — to one
+    * `_manifest/` listing for every read after the first against an
+    * unchanged version. */
   private val snapCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, Long, Long, Long), Snap](
         8, 0.75f, true) {
@@ -852,7 +495,7 @@ object TableManifest {
       val histHit = histCache.get(key)
       if (histHit != null) return histHit
     }
-    val snap = parseBody(v, readBody(fs, st.getPath)) match {
+    val snap = ManifestCodec.decode(v, readBody(fs, st.getPath)) match {
       case Right(full) => full
       case Left(d) =>
         val anchor: (Long, Snap) = {
@@ -865,7 +508,7 @@ object TableManifest {
             case Some((w, _, _, s0)) => (w, s0)
             case None =>
               val bst = statusOf(d.base)
-              parseBody(d.base, readBody(fs, bst.getPath)) match {
+              ManifestCodec.decode(d.base, readBody(fs, bst.getPath)) match {
                 case Right(s0) => (d.base, s0)
                 case Left(_) => sys.error(
                   s"manifest v${d.base} of $dir is a delta record but " +
@@ -876,7 +519,7 @@ object TableManifest {
         var s = anchor._2
         var w = anchor._1 + 1
         while (w < v) {
-          s = parseBody(w, readBody(fs, statusOf(w).getPath)) match {
+          s = ManifestCodec.decode(w, readBody(fs, statusOf(w).getPath)) match {
             case Right(full) => full
             case Left(dw) => applyDelta(s, dw)
           }
@@ -908,10 +551,8 @@ object TableManifest {
   private val HeadProbeLimit = 32
 
   private def readHeadHint(fs: FileSystem, mdir: Path): Option[Long] =
-    scala.util.Try {
-      val body = readBody(fs, new Path(mdir, HeadHintName))
-      """"v":(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
-    }.toOption.flatten
+    scala.util.Try(ManifestCodec.topLevelLong("head hint",
+      readBody(fs, new Path(mdir, HeadHintName)), "v")).toOption.flatten
 
   /** Overwrite the hint with `v` — best-effort (tmp + rename; any
     * failure is swallowed: the hint is advisory). Concurrent committers
@@ -920,7 +561,8 @@ object TableManifest {
   private def writeHeadHint(fs: FileSystem, table: Path, v: Long): Unit = {
     scala.util.Try {
       val mdir = new Path(table, ManifestDir)
-      val body = s"""{"v":$v}""".getBytes(StandardCharsets.UTF_8)
+      val body =
+        s"""{"v":$v}""".getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val target = new Path(mdir, HeadHintName)
       if (fs.getScheme == "file") {
         // a hint written through the checksummed local fs left a CRC that
@@ -1075,8 +717,16 @@ object TableManifest {
     * entirely (every commit a full snapshot — the pre-round-15 behavior,
     * and what a test drilling hand-pruned histories should pin). */
   private def checkpointInterval(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.manifest.checkpointInterval")
-      .flatMap(_.trim.toIntOption).map(math.max(1, _)).getOrElse(8)
+    math.max(1, intConf(spark, "spark.graft.manifest.checkpointInterval", 8))
+
+  /** An integer `spark.graft.*` conf, `default` when unset. A value that
+    * is not an integer fails loudly, naming the key: falling back to the
+    * default would silently run with a setting nobody chose. */
+  private def intConf(spark: SparkSession, key: String,
+      default: Int): Int =
+    spark.conf.getOption(key).map(v => v.trim.toIntOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be an integer, got '$v'"))).getOrElse(default)
 
   /** ADAPTIVE checkpoint cadence: the configured interval is the FLOOR,
     * and the effective interval grows with the table's file count —
@@ -1096,9 +746,8 @@ object TableManifest {
     val floor = checkpointInterval(spark)
     if (floor <= 1) floor
     else {
-      val filesPerDelta = spark.conf
-        .getOption("spark.graft.manifest.checkpointFilesPerDelta")
-        .flatMap(_.trim.toIntOption).map(math.max(1, _)).getOrElse(16384)
+      val filesPerDelta = math.max(1,
+        intConf(spark, "spark.graft.manifest.checkpointFilesPerDelta", 16384))
       math.min(64, math.max(floor, headFileCount / filesPerDelta))
     }
   }
@@ -1113,152 +762,15 @@ object TableManifest {
     * process-wide, so the bound follows whichever session is driving. */
   private def cacheEntriesBound: Int =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(_.conf.getOption("spark.graft.manifest.cacheEntries"))
-      .flatMap(_.trim.toIntOption).map(math.max(1, _)).getOrElse(4)
+      .map(s => math.max(1, intConf(s, "spark.graft.manifest.cacheEntries", 4)))
+      .getOrElse(4)
 
-  private def safeStatName(c: String): Boolean =
-    c.nonEmpty && SafeStatValue.matches(c)
-
-  /** Drop stat entries that would break the no-escaping invariant (only
-    * costs pruning power — the file stays a candidate). Applied BEFORE
-    * both rendering and commit-time cache updates, so the cached snapshot
-    * and a fresh parse of the written body can never diverge. */
-  private def cleanStats(stats: FileStats): FileStats = stats
-    .map { case (f, cols) => f -> cols.filter(kv => safeStatName(kv._1)) }
-    .filter(_._2.nonEmpty)
-  private def cleanSStats(sstats: FileStringStats): FileStringStats = sstats
-    .map { case (f, cols) => f -> cols.filter { case (c, (lo, hi)) =>
-      safeStatName(c) && SafeStatValue.matches(lo) && SafeStatValue.matches(hi)
-    } }
-    .filter(_._2.nonEmpty)
+  /** Blooms whose bitmap is not lowercase hex are dropped (a bloom that
+    * cannot be decoded only stops pruning). Applied before both the body
+    * and the commit-time cache poke, so the two can never diverge. */
   private def cleanBloom(bloom: FileBloom): FileBloom = bloom
-    .map { case (f, cols) => f -> cols.filter { case (c, hex) =>
-      safeStatName(c) && hex.matches("[0-9a-f]*")
-    } }
+    .map { case (f, cols) => f -> cols.filter(_._2.matches("[0-9a-f]*")) }
     .filter(_._2.nonEmpty)
-
-  /** The no-escaping invariant for load-bearing file names: loud, never
-    * silently dropped. */
-  private def requireJsonSafeNames(files: Seq[String]): Unit =
-    files.foreach(f => require(
-      f.nonEmpty && !f.exists(c =>
-        c == '"' || c == '[' || c == ']' || c == '{' || c == '}' ||
-          c == '\\'),
-      s"manifest file name not JSON-safe: $f"))
-
-  /** The shared stat/inventory tail of both body kinds. Inputs must be
-    * pre-cleaned. */
-  private def statSections(stats: FileStats, sstats: FileStringStats,
-      bloom: FileBloom, fstat: Map[String, (Long, Long)]): String = {
-    val statsJson =
-      if (stats.isEmpty) ""
-      else stats.toSeq.sortBy(_._1).map { case (f, cols) =>
-        "\"" + f + "\":" + cols.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-          "\"" + c + "\":[" + lo + "," + hi + "]"
-        }.mkString("{", ",", "}")
-      }.mkString(s""","statsv":$StatsFormat,"stats":{""", ",", "}")
-    val sstatsJson =
-      if (sstats.isEmpty) ""
-      else sstats.toSeq.sortBy(_._1).map { case (f, cols) =>
-        "\"" + f + "\":" + cols.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-          "\"" + c + "\":[\"" + lo + "\",\"" + hi + "\"]"
-        }.mkString("{", ",", "}")
-      }.mkString(",\"sstats\":{", ",", "}")
-    val bloomJson =
-      if (bloom.isEmpty) ""
-      else bloom.toSeq.sortBy(_._1).map { case (f, cols) =>
-        "\"" + f + "\":" + cols.toSeq.sortBy(_._1).map { case (c, hex) =>
-          "\"" + c + "\":\"" + hex + "\""
-        }.mkString("{", ",", "}")
-      }.mkString(",\"bloom\":{", ",", "}")
-    val fstatJson =
-      if (fstat.isEmpty) ""
-      else fstat.toSeq.sortBy(_._1).map { case (f, (len, mtime)) =>
-        "\"" + f + "\":[" + len + "," + mtime + "]"
-      }.mkString(",\"filestat\":{", ",", "}")
-    statsJson + sstatsJson + bloomJson + fstatJson
-  }
-
-  private def metaSections(hwm: Option[Long], ctimeMillis: Option[Long],
-      schemaB64: Option[String], partSchemaB64: Option[String],
-      colmapB64: Option[String] = None): String = {
-    schemaB64.foreach(s => require(s.matches("[A-Za-z0-9+/=]*"),
-      "manifest schema must be base64 (no-escaping invariant)"))
-    partSchemaB64.foreach(s => require(s.matches("[A-Za-z0-9+/=]*"),
-      "manifest partition schema must be base64 (no-escaping invariant)"))
-    colmapB64.foreach(s => require(s.matches("[A-Za-z0-9+/=]*"),
-      "manifest column mapping must be base64 (no-escaping invariant)"))
-    hwm.map(h => s""""hwm":$h,""").getOrElse("") +
-      ctimeMillis.map(t => s""""ctime":$t,""").getOrElse("") +
-      schemaB64.map(s => s""""schemab64":"$s",""").getOrElse("") +
-      partSchemaB64.map(s => s""""partschemab64":"$s",""").getOrElse("") +
-      colmapB64.map(s => s""""colmapb64":"$s",""").getOrElse("")
-  }
-
-  /** Render a CHECKPOINT (full-snapshot) body. Stat maps must be
-    * pre-cleaned ([[cleanStats]] family). The no-escaping invariant is
-    * enforced HERE, not only in the footer reader: commitIf is public
-    * API, and one unsafe caller-supplied value would either corrupt the
-    * whole body (a brace breaks sliceObject's depth count) or round-trip
-    * to FABRICATED ranges (an embedded quote re-splits under the regex)
-    * → unsound pruning. */
-  private def render(version: Long, token: String, files: Seq[String],
-      hwm: Option[Long], stats: FileStats,
-      sstats: FileStringStats, bloom: FileBloom,
-      schemaB64: Option[String],
-      fstat: Map[String, (Long, Long)] = Map.empty,
-      ctimeMillis: Option[Long] = None,
-      partSchemaB64: Option[String] = None,
-      colmapB64: Option[String] = None,
-      dvs: Map[String, (String, Long)] = Map.empty): String = {
-    requireJsonSafeNames(files)
-    val meta = metaSections(hwm, ctimeMillis, schemaB64, partSchemaB64,
-      colmapB64)
-    val filesJson = files.sorted.map(f => "\"" + f + "\"")
-      .mkString("[", ",", "]")
-    // the reader-protocol stamp derives from the body's OWN content —
-    // a body only ever requires what it actually carries
-    val feats = featuresSection(
-      (if (colmapB64.isDefined) Set("colmap") else Set.empty[String]) ++
-        (if (dvs.nonEmpty) Set("dvs") else Set.empty[String]))
-    // dvs rendered right after the files array, BEFORE the stat
-    // objects (the name-section ordering rule sliceObject anchoring
-    // depends on)
-    s"""{"version":$version,"token":"$token",$feats$meta"files":$filesJson""" +
-      dvsSection(dvs) +
-      statSections(cleanStats(stats), cleanSStats(sstats),
-        cleanBloom(bloom), fstat) + "}"
-  }
-
-  /** Render a DELTA record body (see [[DeltaBaseRe]]): names
-    * added/removed vs the previous version plus stat OVERLAYS for the
-    * commit's fresh entries — O(delta) bytes written instead of the
-    * complete O(files) snapshot. Schema / partition declaration / hwm /
-    * ctime ride every record in full (tiny), so a record is
-    * self-contained on whole-table metadata and replay only folds the
-    * name and stat sections. */
-  private def renderDelta(version: Long, token: String, base: Long,
-      adds: Seq[String], removes: Seq[String], hwm: Option[Long],
-      stats: FileStats, sstats: FileStringStats, bloom: FileBloom,
-      schemaB64: Option[String], fstat: Map[String, (Long, Long)],
-      ctimeMillis: Option[Long], partSchemaB64: Option[String],
-      dvs: Map[String, (String, Long)] = Map.empty): String = {
-    requireJsonSafeNames(adds)
-    requireJsonSafeNames(removes)
-    val meta = metaSections(hwm, ctimeMillis, schemaB64, partSchemaB64)
-    def arr(names: Seq[String]): String =
-      names.sorted.map(f => "\"" + f + "\"").mkString("[", ",", "]")
-    // a delta record never restates the colmap (it inherits — and the
-    // base checkpoint it replays from carries its own stamp), so the
-    // only capability a RECORD can require is its dv overlay
-    val feats = featuresSection(
-      if (dvs.nonEmpty) Set("dvs") else Set.empty[String])
-    s"""{"version":$version,"token":"$token","delta":1,"base":$base,""" +
-      feats + meta + s""""adds":${arr(adds)},"removes":${arr(removes)}""" +
-      dvsSection(dvs) +
-      statSections(cleanStats(stats), cleanSStats(sstats),
-        cleanBloom(bloom), fstat) + "}"
-  }
 
   /** Atomically create the manifest file for exactly this version: local
     * filesystems get [[publishLocal]]'s hard link (it fails on an existing
@@ -1402,11 +914,12 @@ object TableManifest {
     val outPartSchema0 =
       if (replacePartSchema) partSchema
       else partSchema.orElse(headS.flatMap(_.partSchema))
-    // normalized ONCE, before both the body render and the cache poke: the
-    // stored schema is deep-nullable (what a scan serves — encodeSchema's
-    // contract), and a cached snapshot whose nullability diverged from a
-    // fresh parse of the same body would make the read path's plan depend
-    // on cache state
+    // normalized ONCE, before both the body and the cache poke: the stored
+    // schema is deep-nullable (a file scan serves every column nullable,
+    // since any listed file may predate the column — the view merged
+    // footer inference reports too), and a cached snapshot whose
+    // nullability diverged from a fresh parse of the same body would make
+    // the read path's plan depend on cache state
     val outSchemaStored = outSchema.map(SchemaBridge.asNullable)
     val outPartSchema = outPartSchema0.map(SchemaBridge.asNullable)
     // the column mapping survives commits that didn't restate it (the
@@ -1473,10 +986,8 @@ object TableManifest {
     val v = expectedHead + 1
     val ctime = System.currentTimeMillis()
     val token = UUID.randomUUID().toString
-    // stat overlays pre-cleaned so the post-commit cache poke and a fresh
-    // parse of the written body can never diverge
-    val freshStats = cleanStats(stats.filter(kv => fileSet(kv._1)))
-    val freshSStats = cleanSStats(sstats.filter(kv => fileSet(kv._1)))
+    val freshStats = stats.filter(kv => fileSet(kv._1))
+    val freshSStats = sstats.filter(kv => fileSet(kv._1))
     val freshBloom = cleanBloom(bloom.filter(kv => fileSet(kv._1)))
     // DELTA vs CHECKPOINT: a delta record is written when the head's
     // replay chain is still short (bounded by [[checkpointInterval]] — so
@@ -1515,10 +1026,10 @@ object TableManifest {
         math.max(8, headFiles.size + added.size)
     val (body, snap) =
       if (writeDelta) {
-        // adds/removes SORTED before both the record and the cache poke:
-        // renderDelta sorts the body's name arrays, so an unsorted poke
-        // would make the same version's resolved file ORDER depend on
-        // cache state (nondeterministic split assignment across JVMs)
+        // adds/removes SORTED once, for both the record and the cache
+        // poke: a poke in another order than the body's would make the
+        // same version's resolved file ORDER depend on cache state
+        // (nondeterministic split assignment across JVMs)
         val addedS = added.sorted
         val removedS = removed.sorted
         // the record's inventory overlay = entries for ADDED files plus
@@ -1534,14 +1045,7 @@ object TableManifest {
         val rec = DeltaRec(headS.get.base, addedS, removedS,
           outSchemaStored, outPartSchema, freshStats, freshSStats, freshBloom,
           deltaFstat, hwm, Some(ctime), dvs = callerDvs)
-        (renderDelta(v, token, rec.base, addedS, removedS, hwm,
-          freshStats, freshSStats, freshBloom,
-          outSchemaStored.map(encodeSchema), deltaFstat,
-          ctimeMillis = Some(ctime),
-          partSchemaB64 = outPartSchema.map(encodeSchema),
-          dvs = callerDvs)
-          .getBytes(StandardCharsets.UTF_8),
-          applyDelta(headS.get, rec))
+        (ManifestCodec.encodeDelta(v, token, rec), applyDelta(headS.get, rec))
       } else {
         // data-skipping stats survive a checkpoint like they survived
         // every full body: carry the head's stats for files still listed,
@@ -1565,18 +1069,12 @@ object TableManifest {
         val outFstat =
           (headS.map(_.fstat).getOrElse(Map.empty) ++ callerFstat)
             .filter(kv => fileSet(kv._1)) ++ statted
-        (render(v, token, files, hwm, outStats, outSStats, outBloom,
-          outSchemaStored.map(encodeSchema), outFstat,
-          ctimeMillis = Some(ctime),
-          partSchemaB64 = outPartSchema.map(encodeSchema),
-          colmapB64 =
-            if (outRenames.isEmpty && outDropped.isEmpty) None
-            else Some(encodeColmap(outRenames, outDropped, files.sorted)),
-          dvs = outDvs)
-          .getBytes(StandardCharsets.UTF_8),
-          Snap(files.sorted.toVector, outSchemaStored, outPartSchema, outStats, outSStats,
-            outBloom, outFstat, hwm, Some(ctime), base = v,
-            renames = outRenames, dropped = outDropped, dvs = outDvs))
+        // files SORTED: the order the body lists them in, and the order
+        // the column mapping's carrier bitmaps index
+        val snap = Snap(files.sorted.toVector, outSchemaStored, outPartSchema,
+          outStats, outSStats, outBloom, outFstat, hwm, Some(ctime), base = v,
+          renames = outRenames, dropped = outDropped, dvs = outDvs)
+        (ManifestCodec.encodeCheckpoint(v, token, snap), snap)
       }
     val target = manifestPath(p, v)
     if (!createExclusive(fs, mdir, target, body)) None
@@ -1660,8 +1158,8 @@ object TableManifest {
       }
     val outPartSchema = headS.partSchema // appends never restate it
     val addSet = adds.toSet
-    val freshStats = cleanStats(stats.filter(kv => addSet(kv._1)))
-    val freshSStats = cleanSStats(sstats.filter(kv => addSet(kv._1)))
+    val freshStats = stats.filter(kv => addSet(kv._1))
+    val freshSStats = sstats.filter(kv => addSet(kv._1))
     val statted = adds.flatMap { f =>
       scala.util.Try {
         val s = fs.getFileStatus(new Path(p, f))
@@ -1675,11 +1173,7 @@ object TableManifest {
     val rec = DeltaRec(headS.base, addsS, Seq.empty, outSchema,
       outPartSchema, freshStats, freshSStats, Map.empty, statted, hwm,
       Some(ctime))
-    val body = renderDelta(v, token, rec.base, addsS, Seq.empty, hwm,
-      freshStats, freshSStats, Map.empty,
-      outSchema.map(encodeSchema), statted, ctimeMillis = Some(ctime),
-      partSchemaB64 = outPartSchema.map(encodeSchema))
-      .getBytes(StandardCharsets.UTF_8)
+    val body = ManifestCodec.encodeDelta(v, token, rec)
     val target = manifestPath(p, v)
     if (!createExclusive(fs, mdir, target, body)) None
     else {
@@ -1918,8 +1412,7 @@ object TableManifest {
       // FileNotFound here would be rude, not wrong — same politeness
       // discipline as headSnap/snapAt.
       try {
-        val body = readBody(fs, status.getPath)
-        val snap = parseBody(v, body) match {
+        val snap = ManifestCodec.decode(v, readBody(fs, status.getPath)) match {
           case Right(full) => full
           case Left(d) if state != null && stateV == v - 1 =>
             applyDelta(state, d)
@@ -1933,7 +1426,8 @@ object TableManifest {
           else if (files.isEmpty) Some(0L)
           else None
         val cur = files.toSet
-        runningTs = math.max(runningTs, commitTimeOf(status, body))
+        runningTs = math.max(runningTs,
+          snap.ctime.getOrElse(status.getModificationTime))
         val row = (v, new java.sql.Timestamp(runningTs),
           files.size.toLong, bytes,
           (cur -- prev).size.toLong, (prev -- cur).size.toLong,
@@ -2211,7 +1705,9 @@ object TableManifest {
     val mdir = new Path(p, ManifestDir)
     if (!fs.exists(mdir)) return None
     // commit times come from the manifest BODY (exact wall-clock millis
-    // recorded at commit; see CtimeRe), falling back to the file mtime
+    // recorded at commit by commitIf; file mtimes have 1-second
+    // granularity on many filesystems and do not survive a copy),
+    // falling back to the file mtime
     // for pre-field manifests — and are MONOTONIZED by running max over
     // ascending versions (the Delta in-commit-timestamp posture): commits
     // are sequential, but wall clocks across committing processes can
@@ -2223,18 +1719,12 @@ object TableManifest {
       .sortBy(_._1)
     var running = Long.MinValue
     versions.map { case (v, s) =>
-      val ct = parseCtime(readBody(fs, s.getPath))
-        .getOrElse(s.getModificationTime)
+      val ct = ManifestCodec.topLevelLong(s"manifest v$v",
+        readBody(fs, s.getPath), "ctime").getOrElse(s.getModificationTime)
       running = math.max(running, ct)
       (v, running)
     }.filter(_._2 <= epochMillis).lastOption.map(_._1)
   }
-
-  /** The recorded commit wall-clock of one version (body `ctime`, mtime
-    * fallback) — what DESCRIBE HISTORY / DETAIL surface. */
-  private def commitTimeOf(
-      status: org.apache.hadoop.fs.FileStatus, body: String): Long =
-    parseCtime(body).getOrElse(status.getModificationTime)
 
   /** Time travel by WALL CLOCK: scan the table as it was at
     * `epochMillis` ([[readTableAt]] of [[versionAsOfTime]]'s answer).
@@ -2518,11 +2008,13 @@ object TableManifest {
 
   /** Footer min/max per requested column of one parquet file, merged
     * across row groups; a column missing stats in ANY row group is
-    * dropped (pruning on it would be unsound). String bounds outside
-    * [[SafeStatValue]] are dropped too: ASCII-safe bounds compare
-    * identically in parquet's unsigned byte order and Java's string order
-    * (and a file containing any non-ASCII value would surface it in the
-    * bounds, dropping the stat — conservative, never wrong). */
+    * dropped (pruning on it would be unsound). String bounds merge in
+    * parquet's own order, unsigned UTF-8 bytes, which is
+    * `UTF8String.compareTo` and not Java's `String` order (the two differ
+    * for supplementary code points against U+E000–U+FFFF). A string bound
+    * longer than 64 characters (possibly a writer-truncated prefix) or not
+    * valid UTF-8 drops the column's string stat — conservative, never
+    * wrong. */
   private def footerStats(
       conf: org.apache.hadoop.conf.Configuration, file: String,
       cols: Set[String])
@@ -2535,9 +2027,11 @@ object TableManifest {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      val sacc = scala.collection.mutable.Map.empty[String, (String, String)]
+      val sacc =
+        scala.collection.mutable.Map.empty[String, (UTF8String, UTF8String)]
       val dropped = scala.collection.mutable.Set.empty[String]
-      def safe(s: String): Boolean = SafeStatValue.matches(s)
+      def bound(b: Array[Byte]): Option[UTF8String] =
+        Some(UTF8String.fromBytes(b)).filter(u => u.isValid && u.numChars <= 64)
       for {
         block <- reader.getFooter.getBlocks.asScala
         cc <- block.getColumns.asScala
@@ -2577,22 +2071,22 @@ object TableManifest {
             cc.getPrimitiveType.getLogicalTypeAnnotation.isInstanceOf[
               org.apache.parquet.schema.LogicalTypeAnnotation
                 .StringLogicalTypeAnnotation] =>
-          val lo = new String(s.getMinBytes, StandardCharsets.UTF_8)
-          val hi = new String(s.getMaxBytes, StandardCharsets.UTF_8)
-          if (safe(lo) && safe(hi)) {
-            val (plo, phi) = sacc.getOrElse(name, (lo, hi))
-            sacc(name) =
-              (if (lo < plo) lo else plo, if (hi > phi) hi else phi)
-          } else {
-            dropped += name
-            sacc.remove(name)
+          (bound(s.getMinBytes), bound(s.getMaxBytes)) match {
+            case (Some(lo), Some(hi)) =>
+              val (plo, phi) = sacc.getOrElse(name, (lo, hi))
+              sacc(name) = (if (lo.compareTo(plo) < 0) lo else plo,
+                if (hi.compareTo(phi) > 0) hi else phi)
+            case _ =>
+              dropped += name
+              sacc.remove(name)
           }
         case _ =>
           dropped += name
           acc.remove(name)
           sacc.remove(name)
       }
-      (acc.toMap, sacc.toMap)
+      (acc.toMap,
+        sacc.map { case (c, (lo, hi)) => c -> (lo.toString, hi.toString) }.toMap)
     } finally reader.close()
   }
 
@@ -2637,8 +2131,7 @@ object TableManifest {
     * schema there is nothing to merge and no merge-order to get wrong. */
   private[graft] def homogeneousFooterSchema(spark: SparkSession,
       paths: Seq[String]): Option[StructType] = {
-    val limit = spark.conf.getOption("spark.graft.read.footerDriverLimit")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(256)
+    val limit = intConf(spark, "spark.graft.read.footerDriverLimit", 256)
     if (paths.isEmpty || paths.size > limit) return None
     // the SHARED context conf, like every other manifest FS op (fsFor):
     // sessionState.newHadoopConf() builds a fresh Configuration whose
@@ -3060,15 +2553,21 @@ object TableManifest {
       }
     }
 
+  /** Bounds compare in UTF-8 byte order, the order [[footerStats]]
+    * merged them in. */
   private def filterByStringValues(files: Seq[String],
       sstats: FileStringStats, column: String,
-      values: Seq[String]): Seq[String] =
+      values: Seq[String]): Seq[String] = {
+    val vs = values.map(UTF8String.fromString)
     files.filter { f =>
       sstats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => values.exists(v => mn <= v && v <= mx)
+        case Some((mn, mx)) =>
+          val (lo, hi) = (UTF8String.fromString(mn), UTF8String.fromString(mx))
+          vs.exists(v => lo.compareTo(v) <= 0 && v.compareTo(hi) <= 0)
         case None => true
       }
     }
+  }
 
   /** Point lookup with bloom skipping: open ONLY the files whose bloom
     * can contain one of `values`, then apply the exact predicate —
@@ -4165,10 +3664,9 @@ object TableManifest {
     * keyed by the name each file actually carries — sound by the same
     * grouping. Rejected loudly: unknown columns, partition columns
     * (their values live in the directory names), renaming onto an
-    * existing column, and non-identifier names (the manifest's
-    * no-escaping invariant). Always commits a CHECKPOINT (delta records
-    * inherit the mapping, so the commit that changes it must
-    * re-anchor). Returns the committed version. */
+    * existing column, and non-identifier names. Always commits a
+    * CHECKPOINT (delta records inherit the mapping, so the commit that
+    * changes it must re-anchor). Returns the committed version. */
   def renameColumn(spark: SparkSession, dir: String, from: String,
       to: String): Long = {
     require(to.matches("[A-Za-z_]\\w*"),
@@ -5273,12 +4771,7 @@ object TableManifest {
         var unwound: Set[String] = null // listing at lastVersion - 1
         while (pending.nonEmpty && newerMtime > cutoff && desc.hasNext) {
           val (v, ms) = desc.next()
-          val body = {
-            val in = fs.open(ms.getPath)
-            try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-            finally in.close()
-          }
-          val parsed = parseBody(v, body)
+          val parsed = ManifestCodec.decode(v, readBody(fs, ms.getPath))
           val listed: Set[String] = parsed match {
             case Right(full) => full.files.toSet
             case Left(_) if unwound != null && lastVersion == v + 1 =>
@@ -5337,13 +4830,8 @@ object TableManifest {
     val chainBase: Long = manifests.map(_._1).filter(_ >= keepBound)
       .minOption.flatMap { oldest =>
         manifests.find(_._1 == oldest).map { case (_, st) =>
-          val body = {
-            val in = fs.open(st.getPath)
-            try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-            finally in.close()
-          }
-          DeltaBaseRe.findFirstMatchIn(body)
-            .map(_.group(1).toLong).getOrElse(oldest)
+          ManifestCodec.topLevelLong(s"manifest v$oldest",
+            readBody(fs, st.getPath), "base").getOrElse(oldest)
         }
       }.getOrElse(keepBound)
     val deadManifests = manifests
@@ -5355,10 +4843,10 @@ object TableManifest {
     // the window (restore's own post-CAS verification closes its side).
     val liveNow = readHead(spark, dir).map(_._2.toSet).getOrElse(Set.empty)
     // DELETION-VECTOR sidecars: reclaim `_dv/` files no SURVIVING
-    // manifest references. References appear VERBATIM in bodies (a
-    // checkpoint restates the whole dvs section; a delta carries the
-    // overlay that introduced the dv), and retention keeps the whole
-    // chain [chainBase, head], so one regex pass over the surviving
+    // manifest references. Every body names the sidecars it references
+    // in its `dvs` section (a checkpoint restates the whole section; a
+    // delta carries the overlay that introduced the dv), and retention
+    // keeps the whole chain [chainBase, head], so decoding the surviving
     // bodies is exhaustive for every still-resolvable version. A dv
     // whose last lister is pruned in THIS pass dies with it — the same
     // reader-exposure class as data files of pruned versions (time
@@ -5383,12 +4871,9 @@ object TableManifest {
         val deadM = deadManifests.map(_.getPath.getName).toSet
         def refsOf(sts: Seq[org.apache.hadoop.fs.FileStatus]): Set[String] =
           sts.flatMap { st =>
-            val body = {
-              val in = fs.open(st.getPath)
-              try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-              finally in.close()
-            }
-            """dv-[0-9a-f\-]+\.bin""".r.findAllIn(body)
+            val v = versionOf(st.getPath.getName).get
+            ManifestCodec.decode(v, readBody(fs, st.getPath))
+              .fold(_.dvs, _.dvs).valuesIterator.map(_._1)
           }.toSet
         val (deadSts, liveSts) = manifests.map(_._2)
           .partition(s => deadM(s.getPath.getName))

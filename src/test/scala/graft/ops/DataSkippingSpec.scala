@@ -202,7 +202,7 @@ class DataSkippingSpec extends SparkSpec {
       >= hit.size)
   }
 
-  test("string-category stats prune source slices; unsafe values drop safely") {
+  test("category stats prune source slices; quoted values keep stats") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cat").toString
     // one file per source batch, via the streaming appender with stats
     Seq(Seq("arxiv", "arxiv", "books"), Seq("cc", "cc"), Seq("wiki"))
@@ -232,16 +232,16 @@ class DataSkippingSpec extends SparkSpec {
       got.select("source").distinct().collect().map(_.getString(0)).toSeq
         == Seq("cc"))
 
-    // a value outside the safe charset (quote) drops that file's stat —
-    // the file becomes a permanent conservative candidate, never a wrong
-    // answer
+    // a value with a quote is a stat like any other: the body escapes it,
+    // and the file is pruned from slices its bounds exclude
     graft.streaming.ManifestAppendSink.applyBatch(
       Seq((99L, "we\"ird")).toDF("doc_id", "source").coalesce(1),
       7L, dir, statsCols = Seq("source"))
     val sstats2 = TableManifest.readStringStats(spark, dir)
-    assert(sstats2.size == 3, "unsafe-value file must carry no source stat")
+    assert(sstats2.size == 4, "the quoted value's file carries its source stat")
+    assert(sstats2.values.map(_("source")).toSet.contains(("we\"ird", "we\"ird")))
     assert(TableManifest.prunedFilesIn(spark, dir, "source", Seq("cc"))
-      .size == 2, "unguarded file stays a candidate for every slice")
+      .size == 1, "the quoted file is pruned from the cc slice")
     assert(TableManifest.readTableWhereIn(spark, dir, "source", Seq("cc"))
       .count() == 2, "exact predicate still filters the candidate")
   }
@@ -378,27 +378,31 @@ class DataSkippingSpec extends SparkSpec {
     }
   }
 
-  test("render drops unsafe caller stats; unsafe file names fail loud") {
+  test("quoted caller stats round-trip; bad file names fail loud") {
     val dir = java.nio.file.Files.createTempDirectory("graft-unsafe").toString
-    // an embedded quote would re-split under the parser's regex into a
-    // FABRICATED range; a brace would corrupt depth counting — both must
-    // be dropped at commit, leaving the body parseable and the file a
-    // conservative candidate
+    // quotes and braces in caller stats are escaped by the body, so they
+    // are kept and round-trip exactly, through a cold read as well
+    val sstats = Map(
+      "a.parquet" -> Map("src" -> (("we\"ird", "z"))),
+      "b.parquet" -> Map("src" -> (("ok", "also{bad}")),
+        "lang" -> (("de", "en"))))
     val v = TableManifest.commitIf(spark, dir, Seq("a.parquet", "b.parquet"),
       0L,
       stats = Map("a.parquet" -> Map("k" -> ((1L, 2L)))),
-      sstats = Map(
-        "a.parquet" -> Map("src" -> (("we\"ird", "z"))),
-        "b.parquet" -> Map("src" -> (("ok", "also{bad}")),
-          "lang" -> (("de", "en")))))
+      sstats = sstats)
     assert(v.contains(1L))
     assert(TableManifest.readStats(spark, dir) ==
       Map("a.parquet" -> Map("k" -> ((1L, 2L)))))
-    assert(TableManifest.readStringStats(spark, dir) ==
-      Map("b.parquet" -> Map("lang" -> (("de", "en")))))
-    assert(TableManifest.prunedFilesIn(spark, dir, "src", Seq("zzz"))
-      .toSet == Set("a.parquet", "b.parquet"),
-      "files with dropped stats stay candidates")
+    assert(TableManifest.readStringStats(spark, dir) == sstats)
+    val cold = java.nio.file.Files.createTempDirectory("graft-unsafe-cold")
+    java.nio.file.Files.createDirectories(cold.resolve("_manifest"))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(dir, "_manifest", f"v${1L}%020d.json"),
+      cold.resolve("_manifest").resolve(f"v${1L}%020d.json"))
+    assert(TableManifest.readStringStats(spark, cold.toString) == sstats)
+    assert(TableManifest.prunedFilesIn(spark, dir, "src", Seq("x"))
+      .toSet == Set("a.parquet"),
+      "kept stats prune: x is inside [we\"ird, z] only")
     // file names are load-bearing: unsafe ones must fail, not degrade
     intercept[IllegalArgumentException](TableManifest.commitIf(
       spark, dir, Seq("evil\"name.parquet"), 1L))

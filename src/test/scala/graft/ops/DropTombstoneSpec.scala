@@ -134,32 +134,29 @@ class DropTombstoneSpec extends SparkSpec {
     val carriers = Set(files(1), files(7), files(19))
     val renames = Seq(TableManifest.Rename("w", "v", carriers))
     val dropped = Seq(TableManifest.Dropped("x", Set(files(0), files(2))))
-    val b64 = TableManifest.encodeColmap(renames, dropped, files)
+    val b64 = ManifestCodec.encodeColmap(renames, dropped, files)
     val decoded = new String(java.util.Base64.getDecoder.decode(b64),
       java.nio.charset.StandardCharsets.UTF_8)
     assert(decoded.contains("\"carrbm\":"), s"bitmap shape used: $decoded")
     assert(!decoded.contains("\"carriers\":"), s"no explicit names: $decoded")
-    val (r2, d2) = TableManifest.parseColmap(
-      s""""colmapb64":"$b64"""", files)
+    val (r2, d2) = ManifestCodec.decodeColmap(b64, files)
     assert(r2 == renames && d2 == dropped, "bitmap round-trips exactly")
     // the pre-round-17 explicit shape (and mixed arrays) still parse
     val legacyJson = """[{"to":"w","from":"v","carriers":["a.parquet"]},""" +
       """{"dropped":"x","carriers":["b.parquet"]}]"""
     val legacyB64 = java.util.Base64.getEncoder.encodeToString(
       legacyJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val (r3, d3) = TableManifest.parseColmap(
-      s""""colmapb64":"$legacyB64"""", files)
+    val (r3, d3) = ManifestCodec.decodeColmap(legacyB64, files)
     assert(r3 == Seq(TableManifest.Rename("w", "v", Set("a.parquet"))))
     assert(d3 == Seq(TableManifest.Dropped("x", Set("b.parquet"))))
     // a carrier missing from the file list falls back to explicit names
     // (soundness over compactness) and still round-trips
     val stray = Seq(TableManifest.Rename("w", "v", Set("not-listed.parquet")))
-    val strayB64 = TableManifest.encodeColmap(stray, Seq.empty, files)
+    val strayB64 = ManifestCodec.encodeColmap(stray, Seq.empty, files)
     val strayDecoded = new String(java.util.Base64.getDecoder
       .decode(strayB64), java.nio.charset.StandardCharsets.UTF_8)
     assert(strayDecoded.contains("\"carriers\":"), strayDecoded)
-    assert(TableManifest.parseColmap(
-      s""""colmapb64":"$strayB64"""", files)._1 == stray)
+    assert(ManifestCodec.decodeColmap(strayB64, files)._1 == stray)
   }
 
   test("cold replay re-resolves tombstones and bitmap carriers from disk alone") {
